@@ -137,11 +137,17 @@ object Bench {
     // own.
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     val warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
+    // a warmup failure is not timed, but it is counted and named: in
+    // the sidecar record and on the summary line
+    val warmupFailed = scala.collection.mutable.ArrayBuffer[String]()
     if (java.nio.file.Files.isDirectory(warmDir) &&
         warmDir.toString != sfDir) {
-      selected.foreach { case (_, fn) =>
+      selected.foreach { case (name, fn) =>
         try { fn(spark, warmDir.toString).count(); () }
-        catch { case _: Throwable => () }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+          warmupFailed += name
+        }
         // the unmanaged shorthands pin shared intermediates per call
         // (signatures, LSH buckets, split parents); release each
         // query's pins immediately so no query is measured against
@@ -243,6 +249,10 @@ object Bench {
     // 100 failures would otherwise blow the summary line off the tail
     val fsShown = failed.take(20)
     val fs = fsShown.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // warmup failures: the count and the first `shown` names
+    def warmupJson(shown: Int) =
+      s""","n_warmup_failed":${warmupFailed.size},"warmup_failed":""" +
+        warmupFailed.take(shown).map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (good.nonEmpty) good.map(_.singleShot).sum else 0.0
     // per-query wall-clock start offsets within the run (ALL benched
     // queries, failures included): lets a reader see exactly where in
@@ -330,7 +340,7 @@ object Bench {
       case Some(_) =>
         s""","bands_checked":true,"band_scale":${sec(bandScale)},"n_outliers":${outliers.size},"n_outliers_norm":${outliersNorm.size},"n_outliers_confirmed":$nConfirmed,"n_unbanded":$nUnbanded,"outliers":$outliersJson,"outliers_norm":$outliersNormJson,"outliers_recheck":$recheckJson"""
     }
-    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${good.size},"n_failed":${failed.size},"failed":$fs,"sf":"$sfDir","pass_orders":$passOrders,"queries":$qs$qsMin$qsP2,"start_offsets":$offs$offs2$bandsTail}"""
+    val full = s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${good.size},"n_failed":${failed.size},"failed":$fs${warmupJson(20)},"sf":"$sfDir","pass_orders":$passOrders,"queries":$qs$qsMin$qsP2,"start_offsets":$offs$offs2$bandsTail}"""
     // The driver captures a bounded stdout TAIL (~2.9 KB, which also
     // holds sbt's ~80-byte epilogue). At ~100 queries the full record
     // alone overflows it, clipping its HEAD mid-map — BENCH_r06 and
@@ -434,7 +444,7 @@ object Bench {
           .mkString("{", ",", "}")
         s""","band_scale":${sec(bandScale)},"n_outliers":${outliers.size},"n_outliers_norm":${outliersNorm.size},"n_outliers_confirmed":$nConfirmed,"outliers_top":$top3"""
     }
-    println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${good.size},"n_failed":${failed.size},"failed":$fs,"sf":"$sfDir","queries_file":"$sideName"$minTail$outSummary}""")
+    println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${good.size},"n_failed":${failed.size},"failed":$fs${warmupJson(3)},"sf":"$sfDir","queries_file":"$sideName"$minTail$outSummary}""")
     spark.stop()
   }
 }

@@ -4,7 +4,10 @@ import graft.model._
 import graft.serial.Formats
 import graft.task.{PTask, RunCtx}
 import graft.loc.LocTemplate
+import java.net.URI
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** The IO access operators: virtual-file reads/writes with layer-merge
@@ -82,25 +85,26 @@ object Access {
   def writeVF(ctx: RunCtx, vf: VirtualFile, df: DataFrame): Unit =
     audited("write", vf, ctx.layers(vf.path))(writeVF0(ctx, vf, df))
 
-  private def writeVF0(ctx: RunCtx, vf: VirtualFile, df: DataFrame): Unit = {
-    val layers = ctx.layers(vf.path)
-    if (layers.isEmpty) return
+  private def writeVF0(ctx: RunCtx, vf: VirtualFile, df: DataFrame): Unit =
     // format dispatch on the DATA extension; a compression suffix
     // (.txt.gz) turns into the writer's codec option — the reference's
     // zlib-wrapped serials work on the write side too
-    def writeOne(target: DataFrame, l: LocTemplate): Unit = {
+    forEachLayer(ctx.layers(vf.path), df) { (target, l) =>
       val ext = l.dataExtension.getOrElse(vf.defaultExt)
       if (l.isHttp) Http.writeLocation(target, l, ext)
       else Formats(ext).write(target, l.raw, l.compressionCodec)
     }
-    layers match {
-      case Seq(single) => writeOne(df, single)
-      case many =>
-        // multi-sink: persist once so the plan runs once, write N times
-        val cached = df.persist()
-        try many.foreach(l => writeOne(cached, l))
-        finally cached.unpersist()
-    }
+
+  /** Write `df` to each layer; with several, persist it once so its
+    * plan runs once for N writes. */
+  private def forEachLayer(layers: Seq[LocTemplate], df: DataFrame)(
+      writeOne: (DataFrame, LocTemplate) => Unit): Unit = layers match {
+    case Seq()       => ()
+    case Seq(single) => writeOne(df, single)
+    case many =>
+      val cached = df.persist()
+      try many.foreach(writeOne(cached, _))
+      finally { cached.unpersist(); () }
   }
 
   /** `loadData` (VFA:73-83): task reading a virtual file. */
@@ -170,47 +174,140 @@ object Access {
     PTask(Catalog.of(vf.copy(usage = Usage.Sink)),
       (ctx, thunk) => if (ctx.isBound(vf.path)) writeVF(ctx, vf, thunk()))
 
+  /** The per-index locations of an indexed access: the LAST bound
+    * layer (as for a SingleLayer read) with `{varName}` spliced. */
+  private def occurrences(op: String, ctx: RunCtx, vf: VirtualFile,
+                          varName: String, indices: Seq[String])
+      : Seq[(String, LocTemplate)] = {
+    val layers = ctx.layers(vf.path)
+    require(layers.nonEmpty, s"$op: ${vf.path} unbound")
+    if (layers.size > 1)
+      auditLog.warn(s"$op ${vf.path}: ${layers.size} layers " +
+        s"bound; indexed reads use the LAST template (${layers.last})")
+    indices.map(i => i -> layers.last.splice(Map(varName -> i)))
+  }
+
+  /** One occurrence read on its own, tagged with its index. */
+  private def readOne(spark: SparkSession, vf: VirtualFile,
+                      indexCol: String)(idx: String, l: LocTemplate)
+      : DataFrame =
+    readLayer(spark, vf, l).withColumn(indexCol, lit(idx))
+
+  /** Every occurrence in ONE scan through the entry's format, each row
+    * tagged with the index whose location holds the row's file
+    * (`_metadata.file_path`). A location is a single file or a Spark
+    * output directory, so a file belongs to the location equal to it
+    * or enclosing it. None where one scan cannot stand for the
+    * per-index reads: http(s) layers, a merge other than UnionByName,
+    * a format that differs per index, two indices sharing a location
+    * or one location inside another, or a format that reads no files
+    * (yaml parses on the driver). */
+  private def scanIndexed(spark: SparkSession, vf: VirtualFile,
+                          occ: Seq[(String, LocTemplate)],
+                          indexCol: String): Option[DataFrame] = {
+    val exts = occ.map(_._2.dataExtension.getOrElse(vf.defaultExt)).distinct
+    if (vf.merge != MergeStrategy.UnionByName || exts.size != 1 ||
+        occ.exists(_._2.isHttp)) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    val qualified = occ.map { case (idx, l) =>
+      val p = new Path(l.raw)
+      idx -> p.getFileSystem(conf).makeQualified(p)
+    }
+    val owner = qualified.map { case (idx, p) => LocTemplate.pathKey(p) -> idx }.toMap
+    def ownerOf(p: Path): Option[String] =
+      Iterator.iterate(p)(_.getParent).takeWhile(_ != null)
+        .flatMap(a => owner.get(LocTemplate.pathKey(a))).nextOption()
+    val nested = qualified.exists { case (_, p) =>
+      Option(p.getParent).flatMap(ownerOf).isDefined }
+    if (owner.size != occ.size || nested) return None
+    val df = Formats(exts.head).read(spark, occ.map(_._2.raw), vf.schema)
+    def fileOwner(f: String) = ownerOf(new Path(new URI(f)))
+    scala.util.Try(df.metadataColumn("_metadata")).toOption
+      .filter(_ => df.inputFiles.forall(fileOwner(_).isDefined)) // not for globs
+      .map { meta =>
+        // rows of one file arrive together: resolve each file once
+        val seen = new java.util.concurrent.ConcurrentHashMap[String, String]
+        val tag = udf((f: String) => seen.computeIfAbsent(f, fileOwner(_).get))
+        df.withColumn(indexCol, tag(meta.getField("file_path")))
+      }
+  }
+
   /** `loadDataList`/`loadDataStream` (VFA:89-111): read N indexed
     * occurrences of a `{var}`-templated file AS ONE DataFrame with an
     * index column — the scale-friendly batching of the reference's
-    * per-index repetition (SURVEY §3.3): one multi-path scan instead of
-    * N tiny jobs. */
+    * per-index repetition (SURVEY §3.3). The occurrences are one
+    * multi-path scan, so schema inference and the scan are one job
+    * each however many indices there are; the index of a row comes
+    * from the file it was read from. Where one scan cannot stand for
+    * the per-index reads (see [[scanIndexed]]: http(s) layers, a
+    * keyed or custom merge, ...) each occurrence is read on its own
+    * and the reads fold with the entry's merge. Schemas: JSON infers
+    * one schema over every file and parquet/orc merge their footers,
+    * as the per-index `unionByName` did; CSV takes its columns from
+    * the header by position. */
   def loadIndexed(vf: VirtualFile, varName: String,
                   indexCol: String = "rep_index")
       : PTask[Seq[String], DataFrame] =
     PTask(Catalog.of(vf.copy(usage = Usage.Source)), (ctx, indices) => {
-      val spark = ctx.spark
-      val layers = ctx.layers(vf.path)
-      require(layers.nonEmpty, s"loadIndexed: ${vf.path} unbound")
-      if (layers.size > 1)
-        auditLog.warn(s"loadIndexed ${vf.path}: ${layers.size} layers " +
-          s"bound; indexed reads use the LAST template (${layers.last})")
-      val tmpl = layers.last
-      val dfs = indices.map { idx =>
-        readLayer(spark, vf, tmpl.splice(Map(varName -> idx)))
-          .withColumn(indexCol, lit(idx))
-      }
-      dfs.reduceLeft(vf.merge(_, _))
+      require(indices.nonEmpty, s"loadIndexed: ${vf.path} read over no indices")
+      val occ = occurrences("loadIndexed", ctx, vf, varName, indices)
+      scanIndexed(ctx.spark, vf, occ, indexCol).getOrElse(occ
+        .map((readOne(ctx.spark, vf, indexCol) _).tupled)
+        .reduceLeft(vf.merge(_, _)))
     })
 
   /** `writeDataList`/`writeDataStream` (VFA:156-176): write a DataFrame
-    * out as one occurrence per distinct value of `indexCol`, splicing
-    * the value into the `{var}` template. Uses a Spark `partitionBy`
-    * write (single distributed job) when the template's var is the path
-    * tail; the layout mirrors the reference's `..._-{var}.ext` files. */
+    * out as one occurrence per distinct value of `indexCol`, at the
+    * location with that value spliced into `{varName}`. Per bound
+    * layer: ONE partitioned write through the entry's format into a
+    * staging directory beside the location, then each
+    * `<indexCol>=<value>/` directory moves to its spliced location,
+    * replacing it whole — what a per-index overwrite write leaves,
+    * from one job instead of one per index. The index column is not
+    * in the files (the location names it). Several layers persist
+    * `df` once, as [[writeVF]] does. An index value with no rows
+    * writes nothing; a null index value fails before any move. */
   def writeIndexed(vf: VirtualFile, varName: String,
                    indexCol: String = "rep_index")
       : PTask[DataFrame, Unit] =
     PTask(Catalog.of(vf.copy(usage = Usage.Sink)), (ctx, df) => {
       val layers = ctx.layers(vf.path)
-      layers.foreach { tmpl =>
-        // partitioned write <dir>/<indexCol>=<value>/... through the
-        // entry's declared format + codec — same dispatch as writeVF
-        val dir = tmpl.splice(Map(varName -> s"by_$indexCol"))
-        Formats(dir.dataExtension.getOrElse(vf.defaultExt))
-          .writePartitioned(df, dir.raw, indexCol, dir.compressionCodec)
-      }
+      audited("writeIndexed", vf, layers)(forEachLayer(layers, df) {
+        (target, tmpl) => writeIndexedLayer(vf, tmpl, varName, indexCol, target)
+      })
     })
+
+  private def writeIndexedLayer(vf: VirtualFile, tmpl: LocTemplate,
+                                varName: String, indexCol: String,
+                                df: DataFrame): Unit = {
+    val hole = tmpl.raw.indexOf(s"{$varName}")
+    require(hole >= 0 && !tmpl.isHttp,
+      s"writeIndexed ${vf.path}: $tmpl is no file location with {$varName}")
+    // staging in the directory above the first spliced segment: the
+    // moves are renames within the sink's filesystem
+    val dir = tmpl.raw.substring(0, tmpl.raw.lastIndexOf('/', hole) + 1)
+    val staging = new Path(s"${dir}_indexed-${java.util.UUID.randomUUID}")
+    val fs = staging.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    try {
+      Formats(tmpl.dataExtension.getOrElse(vf.defaultExt))
+        .writePartitioned(df, staging.toString, indexCol,
+          tmpl.compressionCodec)
+      val parts = fs.listStatus(staging).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$indexCol="))
+        .map(s => s.getPath -> ExternalCatalogUtils.unescapePathName(
+          s.getPath.getName.stripPrefix(s"$indexCol=")))
+      require(!parts.exists(_._2 == ExternalCatalogUtils.DEFAULT_PARTITION_NAME),
+        s"writeIndexed ${vf.path}: null values in $indexCol")
+      parts.foreach { case (src, v) =>
+        val dst = new Path(tmpl.splice(Map(varName -> v)).raw)
+        fs.delete(dst, true)
+        fs.mkdirs(dst.getParent)
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(s"writeIndexed: move $src -> $dst failed")
+      }
+    } finally { fs.delete(staging, true); () }
+  }
 
   /** `writeDataFold` (VFA:180-182): a fold whose STEP writes each
     * incoming element to the virtual file — the reference composes it
@@ -268,36 +365,49 @@ object Access {
   /** Permissive indexed load — reference `tryLoadDataStream`
     * (VFA:114-122): per-index failures become empty slices recorded in
     * the returned (index -> error) map instead of failing the whole
-    * read. */
+    * read. Each location is first probed for existence; the present
+    * ones are read as [[loadIndexed]] reads them, in one scan. Where
+    * that scan cannot run or fails (an unreadable file), each present
+    * occurrence is read on its own and its failure recorded. */
   def tryLoadIndexed(vf: VirtualFile, varName: String,
                      indexCol: String = "rep_index")
       : PTask[Seq[String], (DataFrame, Map[String, String])] =
     PTask(Catalog.of(vf.copy(usage = Usage.Source)), (ctx, indices) => {
       val spark = ctx.spark
-      val layers = ctx.layers(vf.path)
-      require(layers.nonEmpty, s"tryLoadIndexed: ${vf.path} unbound")
-      if (layers.size > 1)
-        auditLog.warn(s"tryLoadIndexed ${vf.path}: ${layers.size} layers " +
-          s"bound; indexed reads use the LAST template (${layers.last})")
-      val tmpl = layers.last
-      val results = indices.map { idx =>
-        val loc = tmpl.splice(Map(varName -> idx))
-        try Right(readLayer(spark, vf, loc).withColumn(indexCol, lit(idx)))
-        catch { case e: Exception => Left(idx -> e.toString) }
+      val conf = spark.sparkContext.hadoopConfiguration
+      val occ = occurrences("tryLoadIndexed", ctx, vf, varName, indices)
+      val (present, missing) = occ.partition { case (_, l) =>
+        l.isHttp || {
+          val p = new Path(l.raw)
+          Option(p.getFileSystem(conf).globStatus(p)).exists(_.nonEmpty)
+        }
       }
-      val dfs = results.collect { case Right(df) => df }
-      val errs = results.collect { case Left(e) => e }.toMap
-      val merged =
-        if (dfs.nonEmpty) dfs.reduceLeft(vf.merge(_, _))
-        else spark.emptyDataFrame
-      (merged, errs)
+      val missingErrs = missing.map { case (idx, l) =>
+        idx -> s"java.io.FileNotFoundException: ${l.raw} does not exist" }
+      val scanned =
+        if (present.isEmpty) None
+        else scala.util.Try(scanIndexed(spark, vf, present, indexCol))
+          .toOption.flatten
+      scanned match {
+        case Some(df) => (df, missingErrs.toMap)
+        case None =>
+          val results = present.map { case (idx, l) =>
+            scala.util.Try(readOne(spark, vf, indexCol)(idx, l))
+              .toEither.left.map(e => idx -> e.toString)
+          }
+          val dfs = results.collect { case Right(df) => df }
+          val errs = results.collect { case Left(e) => e }
+          val merged =
+            if (dfs.nonEmpty) dfs.reduceLeft(vf.merge(_, _))
+            else spark.emptyDataFrame
+          (merged, (missingErrs ++ errs).toMap)
+      }
     })
 
   /** Recursive folder listing as a DataFrame — reference
     * `streamFolder` (TaskPipelineUtils.hs:49-65). Uses the Hadoop FS
     * API so it works on any supported scheme (file:/s3a:/hdfs:). */
   def listFolder(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1015,10 +1016,11 @@ object Dedup {
     * cluster job that must survive executor failure should pass
     * `checkpointDir = Some(dir)`: every round then uses RELIABLE
     * `checkpoint()` into that directory (recomputable from storage,
-    * survives executor loss; checkpoint files are left to the
-    * directory's owner to reap — standard `setCheckpointDir`
-    * semantics), and the returned frame reads from reliable storage
-    * with no consume-before-release constraint.
+    * survives executor loss). Each round's checkpoint files are
+    * deleted when the next round supersedes them; the final round's
+    * back the returned frame, which reads from reliable storage with
+    * no consume-before-release constraint, and are left to the
+    * directory's owner (standard `setCheckpointDir` semantics).
     *
     * Returns (id, component), component = min id in the cluster. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
@@ -1081,13 +1083,25 @@ object Dedup {
             }
           // reliable mode: point the context at the caller's dir once
           // and swap every per-round truncation to checkpoint() —
-          // same lineage shape, storage-backed recovery
+          // same lineage shape, storage-backed recovery. Spark
+          // checkpoints into a fresh subdirectory of the dir it is
+          // given, so "already there" means that subdirectory's parent
+          // is the caller's dir, path for path
+          val conf = spark.sparkContext.hadoopConfiguration
+          def key(p: Path) =
+            graft.loc.LocTemplate.pathKey(p.getFileSystem(conf).makeQualified(p))
           checkpointDir.foreach { d =>
-            if (spark.sparkContext.getCheckpointDir.isEmpty ||
-                spark.sparkContext.getCheckpointDir.exists(
-                  !_.contains(d)))
+            if (!spark.sparkContext.getCheckpointDir.exists(c =>
+                  key(new Path(c).getParent) == key(new Path(d))))
               spark.sparkContext.setCheckpointDir(d)
           }
+          // a superseded round's checkpoint files: nothing reads them
+          // once the next round is checkpointed
+          def reap(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
+            rdds.flatMap(_.getCheckpointFile).foreach { f =>
+              val p = new Path(f)
+              p.getFileSystem(conf).delete(p, true)
+            }
           def truncate(df: DataFrame): DataFrame =
             if (checkpointDir.isDefined) df.checkpoint(true)
             else df.localCheckpoint(true)
@@ -1111,6 +1125,7 @@ object Dedup {
               .join(labels.withColumnRenamed("component", "old"), Seq("id"))
               .filter(col("component") < col("old")).limit(1).count()
             labelRdds.foreach(_.unpersist(blocking = false))
+            if (checkpointDir.isDefined) reap(labelRdds)
             labels = next
             labelRdds = ckRdds(next)
             converged = changed == 0

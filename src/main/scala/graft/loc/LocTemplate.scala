@@ -80,6 +80,14 @@ final case class LocTemplate(raw: String,
 }
 
 object LocTemplate {
+  /** Scheme, authority and decoded path of a qualified path: one
+    * spelling for a location string, a file URI Spark reports and a
+    * checkpoint directory, whichever of `file:/x`, `file:///x` or a
+    * percent-encoded form each arrived in. */
+  def pathKey(p: org.apache.hadoop.fs.Path): String = {
+    val u = p.toUri
+    s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
+  }
   private val VarRe = """\{([A-Za-z0-9_]+)\}""".r
   /** Codecs Spark/Hadoop decompress transparently. */
   val CompressionExts: Set[String] = Set("gz", "deflate", "bz2", "zst", "lz4")

@@ -7,12 +7,17 @@ import scala.concurrent.duration.Duration
 /** Index sets + task repetition (reference Repetition.hs / Internal.hs).
   *
   * Scale note (SURVEY §7 hard-parts): the reference runs a full sub-flow
-  * per index. A naive translation = thousands of tiny Spark jobs. Here:
-  * `parMapTask` fans out DRIVER-side (concurrent job submission — Spark
-  * schedules them FAIR across executors), which is right when each
-  * repetition is itself a Spark job over different files; when the body
-  * is row-local, prefer `Access.loadIndexed` (one multi-path scan with
-  * an index column) and ordinary DataFrame ops — one job total.
+  * per index, and a literal port runs a few Spark jobs per index —
+  * thousands of tiny jobs over a large index set. When the body is
+  * DataFrame ops, repeat it as data instead: `Access.loadIndexed`
+  * reads every occurrence in one scan with an index column, the body
+  * groups or partitions by that column, and `Access.writeIndexed`
+  * writes every occurrence with one partitioned write — a constant
+  * number of jobs for any number of indices (the `user_analysis` CLI
+  * pipeline is this shape). `parMapTask` is for bodies that are not
+  * DataFrame ops: it runs one sub-run per index, fanned out
+  * DRIVER-side (concurrent job submission, which Spark schedules
+  * across executors).
   */
 object Repetition {
 

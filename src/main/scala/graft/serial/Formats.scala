@@ -19,6 +19,10 @@ trait Format {
     * bzip2/zstd/lz4/deflate). Formats without a codec knob ignore it. */
   def write(df: DataFrame, path: String, codec: Option[String]): Unit =
     write(df, path)
+  /** Read `paths` as one DataFrame. Several paths are one scan with
+    * one schema: the declared one, or one inferred over every file
+    * (columnar footers merged), so columns absent from some files
+    * read as null. */
   def read(spark: SparkSession, paths: Seq[String],
            schema: Option[StructType]): DataFrame
   def write(df: DataFrame, path: String): Unit
@@ -40,6 +44,7 @@ object Formats {
     val ext = "parquet"
     def read(s: SparkSession, paths: Seq[String], schema: Option[StructType]) = {
       val r = s.read
+      if (paths.size > 1) r.option("mergeSchema", "true")
       schema.foreach(r.schema)
       r.parquet(paths: _*)
     }
@@ -214,6 +219,7 @@ object Formats {
     val ext = "orc"
     def read(s: SparkSession, paths: Seq[String], schema: Option[StructType]) = {
       val r = s.read
+      if (paths.size > 1) r.option("mergeSchema", "true")
       schema.foreach(r.schema)
       r.orc(paths: _*)
     }

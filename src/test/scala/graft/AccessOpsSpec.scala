@@ -193,6 +193,46 @@ class AccessOpsSpec extends AnyFunSuite {
     assert(l.options("timeoutSeconds") == "5")
   }
 
+  test("loadIndexed: one scan over file and directory occurrences, " +
+       "index taken from each row's file") {
+    import spark.implicits._
+    val base = scratch("loadidx")
+    new java.io.File(base).mkdirs()
+    // a plain file, a Spark-written directory, and a name that the
+    // file URI percent-encodes
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$base/in-a.json"), "{\"id\": 1}\n")
+    Seq(2L, 3L).toDF("id").write.json(s"$base/in-b.json")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$base/in-c d.json"), "{\"id\": 4, \"x\": 5}\n")
+    val m = Mappings(Map(VPath("/in") ->
+      MappingRhs.Layers(Seq(LocTemplate(s"$base/in-{k}.json")))))
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+      }.size
+    val vf = VirtualFile(VPath("/in"), Seq("json"), Usage.Source)
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = org.apache.spark.JobCount(spark.sparkContext) {
+      df = Pipeline.run(spark, Access.loadIndexed(vf, "k"), m,
+        Seq("a", "b", "c d"))
+      df.collect(); ()
+    }
+    assert(scans(df) == 1)
+    assert(jobs <= 2, s"$jobs jobs: one schema inference, one scan")
+    // one schema over every file: `x` is null where a file lacks it
+    assert(df.select("id", "x", "rep_index").as[(Long, Option[Long], String)]
+      .collect().toSet == Set((1L, None, "a"), (2L, None, "b"),
+        (3L, None, "b"), (4L, Some(5L), "c d")))
+    // a keyed merge is a fold over per-index reads, as before
+    val keyed = vf.copy(merge = MergeStrategy.KeyedOverride(Seq("id")))
+    val folded = Pipeline.run(spark, Access.loadIndexed(keyed, "k"), m,
+      Seq("a", "b"))
+    assert(scans(folded) >= 2)
+    assert(folded.select("id", "rep_index").as[(Long, String)].collect()
+      .toSet == Set((1L, "a"), (2L, "b"), (3L, "b")))
+  }
+
   test("tryLoadIndexed: missing occurrence becomes an error entry") {
     import spark.implicits._
     val base = scratch("tryload")

@@ -362,31 +362,59 @@ class ConfigSpec extends AnyFunSuite {
     import spark.implicits._
     val base = graft.Scratch.root + "/cli_users"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    // plant User-{i}.json inputs (fixture shape per FIXTURES.md A.1)
-    Seq(("Lucky", "Luke", 32), ("Jolly", "Jumper", 9)).zipWithIndex.foreach {
-      case ((n, s, a), i) =>
-        Seq((n, s, a)).toDF("userName", "userSurname", "userAge")
-          .write.mode("overwrite").json(s"$base/Inputs/User-$i.json")
+    new java.io.File(s"$base/Inputs").mkdirs()
+    def histogram(name: String): Map[String, Long] =
+      name.toLowerCase.filter(_ != ' ').groupBy(_.toString)
+        .map { case (k, v) => k -> v.length.toLong }
+    // User-{i}.json inputs (fixture shape per FIXTURES.md A.1): even
+    // users a plain one-line file, odd users a Spark-written directory
+    val users = Seq(("Lucky", "Luke", 32), ("Jolly", "Jumper", 9)) ++
+      (2 until 16).map(i => (s"Name$i", s"Surname${"x" * i}", 20 + i))
+    users.zipWithIndex.foreach { case ((n, s, a), i) =>
+      val loc = s"$base/Inputs/User-$i.json"
+      if (i % 2 == 0)
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(loc),
+          s"""{"userName": "$n", "userSurname": "$s", "userAge": $a}\n""")
+      else Seq((n, s, a)).toDF("userName", "userSurname", "userAge")
+        .write.mode("overwrite").json(loc)
     }
-    val spec = JobSpec.parse(
-      s"""data: {users: "0..1"}
-         |locations:
-         |  /: $base
-         |  /Inputs/User: "_-{userId}.json"
-         |  /Outputs/Analysis: "_-{userId}.json"
-         |""".stripMargin)
-    val reg = CLI.registry("user_analysis")
-    val opts = reg.options.resolveStrict(Some(spec.data), Nil)
-    val task = reg.build(spark, opts)
-    Pipeline.run(spark, task.asInstanceOf[graft.task.PTask[Unit, Any]],
-      spec.mappings, ())
-    val a0 = spark.read.json(s"$base/Outputs/Analysis-0.json")
-    val a1 = spark.read.json(s"$base/Outputs/Analysis-1.json")
-    // "luckyluke": l:2,u:2,k:2,c:1,y:1,e:1
-    val hist0 = a0.collect().map(r =>
-      r.getAs[String]("letter") -> r.getAs[Long]("n")).toMap
-    assert(hist0("l") == 2 && hist0("u") == 2 && hist0("k") == 2)
-    assert(a1.count() > 0)
+    // returns the Spark jobs the run started
+    def run(nUsers: Int): Int = {
+      val spec = JobSpec.parse(
+        s"""data: {users: "0..${nUsers - 1}"}
+           |locations:
+           |  /: $base
+           |  /Inputs/User: "_-{userId}.json"
+           |  /Outputs/Analysis: "_-{userId}.json"
+           |""".stripMargin)
+      val reg = CLI.registry("user_analysis")
+      val opts = reg.options.resolveStrict(Some(spec.data), Nil)
+      val task = reg.build(spark, opts)
+      org.apache.spark.JobCount(spark.sparkContext) {
+        Pipeline.run(spark, task.asInstanceOf[graft.task.PTask[Unit, Any]],
+          spec.mappings, ())
+        ()
+      }
+    }
+    def analysis(i: Int): Map[String, Long] =
+      spark.read.json(s"$base/Outputs/Analysis-$i.json").collect()
+        .map(r => r.getAs[String]("letter") -> r.getAs[Long]("n")).toMap
+    val jobs2 = run(2)
+    assert(analysis(0) == Map("l" -> 2L, "u" -> 2L, "c" -> 1L, "k" -> 2L,
+      "y" -> 1L, "e" -> 1L))
+    assert(analysis(1) == Map("j" -> 2L, "o" -> 1L, "l" -> 2L, "y" -> 1L,
+      "u" -> 1L, "m" -> 1L, "p" -> 1L, "e" -> 1L, "r" -> 1L))
+    assert(!new java.io.File(s"$base/Outputs/Analysis-2.json").exists)
+    // sixteen users: every histogram exact, and the job count does not
+    // grow with the users (one scan, one grouped shuffle, one write)
+    val jobs16 = run(16)
+    users.zipWithIndex.foreach { case ((n, s, _), i) =>
+      assert(analysis(i) == histogram(n + s), s"Analysis-$i.json")
+    }
+    assert(jobs2 <= 4 && jobs16 <= 4, s"jobs: 2 users $jobs2, 16 users $jobs16")
+    // the outputs are the only entries the write left in Outputs/
+    assert(new java.io.File(s"$base/Outputs").list().toSet ==
+      (0 until 16).map(i => s"Analysis-$i.json").toSet)
   }
 
   test("boolean flags: bare --flag true, --no-flag false, unknown keys warn") {

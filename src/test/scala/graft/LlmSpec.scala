@@ -273,6 +273,44 @@ class LlmSpec extends AnyFunSuite {
     }
   }
 
+  test("connectedComponents reliable mode: exact checkpoint-dir match; " +
+       "superseded rounds reaped") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a 6-chain takes several label rounds to converge on 1
+    val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val base = java.nio.file.Files.createTempDirectory("graft-cc-reap").toString
+    val ckDir = s"$base/ck"
+    // the context already checkpoints into a dir whose path CONTAINS
+    // ckDir as a substring but is another directory
+    sc.setCheckpointDir(s"$base/ck-other")
+    def rddDirs(root: String): Seq[String] =
+      Option(new java.io.File(root).listFiles).toSeq.flatten
+        .flatMap(d => Option(d.listFiles).toSeq.flatten)
+        .map(_.getName).filter(_.startsWith("rdd-"))
+    try {
+      val comps = Dedup.connectedComponents(pairs, driverThreshold = 0L,
+        checkpointDir = Some(ckDir))
+      val used = sc.getCheckpointDir.get
+      assert(new org.apache.hadoop.fs.Path(used).getParent.toUri.getPath ==
+        new java.io.File(ckDir).getCanonicalPath, used)
+      // one round's files remain: the final labels the frame reads
+      assert(rddDirs(ckDir).size == 1, rddDirs(ckDir))
+      assert(rddDirs(s"$base/ck-other").isEmpty)
+      graft.cache.Pins.release(spark)
+      val m = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(m == (1L to 6L).map(_ -> 1L).toMap)
+      // the same dir again: the context keeps its checkpoint subdir
+      Dedup.connectedComponents(pairs, driverThreshold = 0L,
+        checkpointDir = Some(ckDir + "/")).collect()
+      assert(sc.getCheckpointDir.get == used)
+      assert(rddDirs(ckDir).size == 2)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+      ()
+    }
+  }
+
   test("nearDupDedup keeps one representative per duplicate cluster") {
     import spark.implicits._
     val base = (0 until 60).map(i => s"tok$i").mkString(" ")

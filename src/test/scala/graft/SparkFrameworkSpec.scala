@@ -110,10 +110,23 @@ class SparkFrameworkSpec extends AnyFunSuite {
     val df = spark.read.parquet(s"$sf/lineitem.parquet")
       .select($"l_orderkey", $"l_returnflag".as("rep_index"))
     Pipeline.run(spark, Access.writeIndexed(snk, "flag"), m, df)
-    // partitionBy layout: .../rep_index=A/...
-    val back = spark.read.parquet(s"$out/byflag-by_rep_index.parquet")
-    assert(back.select("rep_index").distinct().count() ==
-      df.select("rep_index").distinct().count())
+    // one byflag-{flag}.parquet per flag and nothing else (no staging
+    // directory left behind), each holding exactly that flag's rows
+    val flags = df.select("rep_index").distinct().as[String].collect().sorted
+    assert(flags.length == 3)
+    assert(new java.io.File(out).list().toSet ==
+      flags.map(f => s"byflag-$f.parquet").toSet)
+    flags.foreach { f =>
+      val got = spark.read.parquet(s"$out/byflag-$f.parquet")
+      val want = df.filter($"rep_index" === f).drop("rep_index")
+      assert(got.columns.toSeq == Seq("l_orderkey"), f)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, f)
+    }
+    // the indexed read gives the input back, index column included
+    val src = VirtualFile(VPath("/out/byflag"), Seq("parquet"), Usage.Source)
+    val back = Pipeline.run(spark, Access.loadIndexed(src, "flag"), m,
+      flags.toSeq).select("l_orderkey", "rep_index")
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
   }
 
   test("fold algebra: applicative product == one-pass df.agg") {
@@ -195,6 +208,12 @@ class SparkFrameworkSpec extends AnyFunSuite {
     val res = Pipeline.run(spark, rep,
       m, Seq("0" -> (), "1" -> (), "2" -> ()))
     assert(res.map(_._2) == Seq(1L, 1L, 1L))
+    // parMapTask_: the same fan-out, results discarded
+    val ran = new java.util.concurrent.atomic.AtomicLong(0)
+    Pipeline.run(spark, graft.rep.Repetition.parMapTask_("i",
+        body >>> PTask.arr((n: Long) => ran.addAndGet(n))),
+      m, Seq("0" -> (), "1" -> (), "2" -> ()))
+    assert(ran.get == 3L)
   }
 
   test("mappingOverStream: first element eager at run time, tail " +

@@ -14,8 +14,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * pass per artifact; these operators rewrite ONLY the partitions
   * that actually contain a taken-down row (takedown lists are tiny
   * against the corpus, so the affected-partition set is too), and
-  * every mutation runs under one crash-safe commit-marker protocol,
-  * so a crash at any point either leaves the layer untouched or is
+  * every mutation commits through [[graft.commit.PartitionSwap]], so
+  * a crash at any point either leaves the layer untouched or is
   * completed by the next entry — rows never half-vanish.
   *
   * Equivalence contract (oracle-proven per layer): after takedown,
@@ -26,17 +26,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (porcupine-core/src/System/TaskPipeline/Run.hs:72-81); takedown
   * is the maintenance face of those layers.
   *
-  * Protocol (the ivfPatchIndex marker protocol, generalized to
-  * subdir-qualified partitions): fresh content for every affected
-  * partition is written under an invisible `_takedown_tmp` while the
-  * live layer stays readable; a `_TAKEDOWN_COMMIT` marker (one
-  * `<hasFresh> <relativePartitionPath>` line per swap) is the commit
-  * point; only then are live partitions swapped (delete live, rename
-  * fresh in — a flag=0 entry means the partition lost every row and
-  * legitimately disappears). Entry-time [[completePending]] replays
-  * a committed tmp and clears an uncommitted one, so reruns converge
-  * from any crash point. Untouched partitions keep their files
-  * byte-for-byte.
+  * Fresh content for every affected partition is staged, committed
+  * and swapped in by that protocol; a partition that lost every row
+  * has no fresh content and legitimately disappears. Untouched
+  * partitions keep their files byte-for-byte.
   *
   * Scale: discovery is one semi-join of the layer against the
   * (broadcast) id set; rewrites are anti-joins over ONLY the
@@ -44,12 +37,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * affected partitions' row mass — a takedown touching 0.1% of
   * partitions rewrites 0.1% of the artifact. */
 object Takedown {
-
-  // shared with Similarity.ivfCompactDelta — the delta fold rides the
-  // SAME tmp/marker/swap protocol (and therefore the same entry-time
-  // recovery every maintenance face already runs)
-  private[llm] val TmpName = "_takedown_tmp"
-  private[llm] val MarkerName = "_TAKEDOWN_COMMIT"
+  import graft.commit.PartitionSwap
 
   /** One completed layer mutation: partitions rewritten (or dropped)
     * and rows removed. (0, 0) means the id set did not intersect the
@@ -63,72 +51,6 @@ object Takedown {
     * column named `idCol` (first column wins). */
   private def idFrame(ids: DataFrame, idCol: String): DataFrame =
     broadcast(ids.select(col(ids.columns.head).as(idCol)).distinct())
-
-  // ---------------------------------------------------------------
-  // The shared swap protocol
-  // ---------------------------------------------------------------
-
-  private[llm] def writeMarker(fs: FileSystem, tmp: Path,
-                               entries: Seq[(String, Boolean)]): Unit = {
-    val out = fs.create(new Path(tmp, MarkerName), true)
-    try out.write(entries.map { case (rel, hasFresh) =>
-      s"${if (hasFresh) 1 else 0} $rel"
-    }.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Execute (or re-execute) the swap for a COMMITTED takedown tmp.
-    * Safe to rerun from any crash point: delete-live happens only
-    * when the fresh replacement still sits in tmp (flag=1, fresh
-    * present) or when the marker proves the partition's new content
-    * is empty (flag=0); a flag=1 entry whose fresh dir is gone was
-    * already renamed into place and is left alone. */
-  private[llm] def applySwap(fs: FileSystem, root: Path, tmp: Path,
-                             entries: Seq[(String, Boolean)]): Unit =
-    entries.foreach { case (rel, hasFresh) =>
-      val live = new Path(root, rel)
-      val fresh = new Path(tmp, rel)
-      if (hasFresh) {
-        if (fs.exists(fresh)) {
-          if (fs.exists(live)) fs.delete(live, true)
-          require(fs.rename(fresh, live),
-            s"takedown rename $fresh -> $live failed")
-        } // else: already swapped by a prior (crashed) run
-      } else if (fs.exists(live)) fs.delete(live, true)
-    }
-
-  /** Entry-time crash recovery: a leftover `_takedown_tmp` under
-    * `dir` WITH its `_TAKEDOWN_COMMIT` marker is the authoritative
-    * source for an interrupted swap — finish it before anything
-    * reads or recomputes the layer. Without the marker the temp
-    * write never completed and no live partition was touched: plain
-    * garbage, cleared. Public so operators can force recovery before
-    * serving after a suspected crash; every takedown entry point
-    * calls it automatically. */
-  def completePending(spark: SparkSession, dir: String): Unit = {
-    val root = new Path(dir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return
-    val tmp = new Path(root, TmpName)
-    if (!fs.exists(tmp)) return
-    val marker = new Path(tmp, MarkerName)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 65536, false)
-        buf.toString("UTF-8")
-      } finally in.close()
-      val entries = text.split("\n").iterator.map(_.trim)
-        .filter(_.nonEmpty).map { line =>
-          val (flag, rel) = line.span(_ != ' ')
-          (rel.drop(1), flag == "1")
-        }.toSeq
-      applySwap(fs, root, tmp, entries)
-    }
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(dir)
-  }
 
   // ---------------------------------------------------------------
   // Batch-keyed ingest layers (corpus / signature / any
@@ -181,20 +103,16 @@ object Takedown {
       return out.toSeq.toDF("artifact", "state", "detail")
     }
     val names = fs.listStatus(root).map(_.getPath.getName).toSeq
-    def classifyTmp(tmpName: String, markerName: String,
-                    label: String): Unit =
-      if (names.contains(tmpName)) {
-        val committed =
-          fs.exists(new Path(new Path(root, tmpName), markerName))
-        out += ((label,
-          if (committed) "pending-committed" else "uncommitted-garbage",
-          if (committed)
-            "recovery state: the next maintenance entry completes it"
-          else "pre-commit leftovers: provably untouched layer, " +
-            "cleared on the next entry"))
-      }
-    classifyTmp(TmpName, MarkerName, "takedown-swap")
-    classifyTmp("_patch_tmp", "_PATCH_COMMIT", "index-patch")
+    if (names.contains(PartitionSwap.TmpName)) {
+      val committed = fs.exists(new Path(
+        new Path(root, PartitionSwap.TmpName), PartitionSwap.MarkerName))
+      out += (("takedown-swap",
+        if (committed) "pending-committed" else "uncommitted-garbage",
+        if (committed)
+          "recovery state: the next maintenance entry completes it"
+        else "pre-commit leftovers: provably untouched layer, " +
+          "cleared on the next entry"))
+    }
     names.filter(_.startsWith("_compact_tmp_")).foreach { n =>
       out += (("compaction-temp", "uncommitted-garbage",
         s"$n: pre-rename fold output, cleared on the next compaction"))
@@ -287,7 +205,7 @@ object Takedown {
     val root = new Path(layerDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    completePending(spark, layerDir)
+    val tmp = PartitionSwap.stage(spark, layerDir)
     val idsB = idFrame(ids, idCol)
     val layer = spark.read.parquet(layerDir)
     // partition-inference types the key as INT when values fit —
@@ -299,8 +217,6 @@ object Takedown {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(_._1)
     if (affected.isEmpty) return (0L, 0L)
-    val tmp = new Path(root, TmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // full post-takedown content of every affected partition, ONE
     // job, partition-keyed into tmp (an emptied partition writes no
     // dir — its flag comes out 0 and the live dir legitimately
@@ -310,13 +226,8 @@ object Takedown {
             .isin(affected.map(_._1): _*))
           .join(idsB, Seq(idCol), "left_anti"), partCol)
       .write.partitionBy(partCol).parquet(tmp.toString)
-    val entries = affected.map { case (p, _) =>
-      (s"$partCol=$p", fs.exists(new Path(tmp, s"$partCol=$p")))
-    }
-    writeMarker(fs, tmp, entries)
-    applySwap(fs, root, tmp, entries)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(layerDir)
+    PartitionSwap.commit(spark, layerDir,
+      affected.map { case (p, _) => s"$partCol=$p" }.toSeq)
     (affected.map(_._2).sum, affected.length.toLong)
   }
 
@@ -325,51 +236,34 @@ object Takedown {
     * centroids are untouched (dropping rows does not move cells), so
     * the `_centroids.txt` sidecar stays authoritative and
     * [[Similarity.ivfTopKIndexedAuto]] serves the patched layout
-    * directly. Completes any pending PATCH first (a committed
-    * `_patch_tmp` would later swap pre-takedown content back in —
-    * taken-down rows must never resurrect). */
+    * directly. */
   def ivfTakedown(spark: SparkSession, indexDir: String,
-                  ids: DataFrame, idCol: String = "vec_id"): Audit = {
-    val root = new Path(indexDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return (0L, 0L)
-    Similarity.completePendingPatch(spark, fs, root, "cell_id")
-    // the `_delta` side segment ([[Similarity.ivfAppendBatch]]) is
-    // invisible to the main read — scrub it separately (batch-keyed,
-    // like any ingest layer) so appended-then-taken-down vectors
-    // cannot survive in the serving union
-    val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
-    val d =
-      if (fs.exists(new Path(deltaDir)))
-        layerTakedown(spark, deltaDir, ids, idCol,
-          partCol = "ingest_batch")
-      else (0L, 0L)
-    val m = layerTakedown(spark, indexDir, ids, idCol,
-      partCol = "cell_id")
-    (d._1 + m._1, d._2 + m._2)
-  }
+                  ids: DataFrame, idCol: String = "vec_id"): Audit =
+    indexTakedown(spark, indexDir, ids, idCol, "cell_id")
 
   /** [[layerTakedown]] over a [[Similarity.pqWriteIndex]] layout
     * (`pq_bucket=` partitions of (id, codes)); codebooks untouched,
-    * `_books.txt` sidecar stays authoritative. Completes any pending
-    * PQ patch first, for the same resurrection reason as
-    * [[ivfTakedown]]. */
+    * `_books.txt` sidecar stays authoritative. */
   def pqTakedown(spark: SparkSession, indexDir: String,
-                 ids: DataFrame, idCol: String = "vec_id"): Audit = {
-    val root = new Path(indexDir)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) return (0L, 0L)
-    Similarity.completePendingPatch(spark, fs, root, "pq_bucket")
-    // scrub the `_delta` segment ([[Similarity.pqAppendBatch]]) too —
-    // same reasoning as [[ivfTakedown]]'s dual-face scrub
-    val deltaDir = s"$indexDir/${Similarity.DeltaDirName}"
+                 ids: DataFrame, idCol: String = "vec_id"): Audit =
+    indexTakedown(spark, indexDir, ids, idCol, "pq_bucket")
+
+  /** The main layout first: its entry recovery lands any pending
+    * patch or delta fold (a committed one would otherwise swap
+    * pre-takedown content back in later). Then the `_delta` side
+    * segment ([[Similarity.ivfAppendBatch]] /
+    * [[Similarity.pqAppendBatch]]), invisible to the main read, is
+    * scrubbed as the batch-keyed layer it is, so appended-then-
+    * taken-down vectors cannot survive in the serving union. */
+  private def indexTakedown(spark: SparkSession, indexDir: String,
+                            ids: DataFrame, idCol: String,
+                            partCol: String): Audit = {
+    val m = layerTakedown(spark, indexDir, ids, idCol, partCol)
+    val deltaDir = new Path(new Path(indexDir), Similarity.DeltaDirName)
     val d =
-      if (fs.exists(new Path(deltaDir)))
-        layerTakedown(spark, deltaDir, ids, idCol,
-          partCol = "ingest_batch")
+      if (fsOf(spark, deltaDir).exists(deltaDir))
+        layerTakedown(spark, deltaDir.toString, ids, idCol)
       else (0L, 0L)
-    val m = layerTakedown(spark, indexDir, ids, idCol,
-      partCol = "pq_bucket")
     (d._1 + m._1, d._2 + m._2)
   }
 
@@ -410,7 +304,7 @@ object Takedown {
     val root = new Path(indexDir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return (0L, 0L)
-    completePending(spark, indexDir)
+    val tmp = PartitionSwap.stage(spark, indexDir)
     val postDir = s"$indexDir/postings"
     if (!fs.exists(new Path(postDir))) return (0L, 0L)
     val idsB = idFrame(ids, idCol)
@@ -450,15 +344,12 @@ object Takedown {
           s"matching stats partition — compact postings/ and stats/ " +
           s"at the same watermark so the subdirs stay id-aligned")
     }
-    val tmp = new Path(root, TmpName)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     // the three tmp writes below (postings / stats / termdf) read
     // disjoint live subdirs and write disjoint tmp subdirs, so they
     // run as CONCURRENT Spark jobs (thread-safe on one session; rm
     // is already materialized by the debits collect). The commit
-    // marker still lands only after ALL of them complete — the crash
-    // protocol is unchanged, an uncommitted tmp is recovered by
-    // completePending either way.
+    // marker still lands only after ALL of them complete; an
+    // uncommitted tmp is discarded by the next entry's recovery.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     // fresh postings for every affected batch: ONE partition-keyed
@@ -541,21 +432,12 @@ object Takedown {
         .map(_.transform(scala.util.Success(_)))),
       scala.concurrent.duration.Duration.Inf)
     outcomes.foreach(_.get)
-    val entries = batches.map { b =>
-      (s"postings/ingest_batch=$b",
-        fs.exists(new Path(tmp, s"postings/ingest_batch=$b")))
-    } ++ batches.map(b => (s"stats/ingest_batch=$b", true)) ++
-      tdBatches.map { b =>
-        (s"termdf/ingest_batch=$b",
-          fs.exists(new Path(tmp, s"termdf/ingest_batch=$b")))
-      }
-    writeMarker(fs, tmp, entries.toSeq)
-    applySwap(fs, root, tmp, entries.toSeq)
-    fs.delete(tmp, true)
-    spark.catalog.refreshByPath(postDir)
-    spark.catalog.refreshByPath(s"$indexDir/stats")
-    if (tdBatches.nonEmpty)
-      spark.catalog.refreshByPath(s"$indexDir/termdf")
+    // one marker over all three subdirs: they can never disagree
+    // past recovery
+    PartitionSwap.commit(spark, indexDir,
+      (batches.map(b => s"postings/ingest_batch=$b") ++
+        batches.map(b => s"stats/ingest_batch=$b") ++
+        tdBatches.map(b => s"termdf/ingest_batch=$b")).toSeq)
     (debits.map(_._2).sum, batches.length.toLong)
     } finally rm.unpersist(blocking = false)
   }

@@ -1302,8 +1302,8 @@ object TextAnalysis {
     // plan, and when `scored` is an unpersisted corpus-sized chain
     // (the score-and-reweight one-shot) every re-evaluation re-pays
     // the whole scoring join — measured 4x on llm_reweight_sample
-    // (ReweightDiag). Collecting the rollup and re-planting it as a
-    // local relation makes the scaladoc's "|sources|-row arithmetic
+    // (HISTORY.md, r18 #2). Collecting the rollup and re-planting it
+    // as a local relation makes the scaladoc's "|sources|-row arithmetic
     // after the groupBy" literally true; the downstream expressions
     // are unchanged, so the output is bit-identical.
     val per = docs.sparkSession.createDataFrame(

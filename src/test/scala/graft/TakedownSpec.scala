@@ -93,7 +93,7 @@ class TakedownSpec extends AnyFunSuite {
       java.nio.file.Paths.get(tmp, "_TAKEDOWN_COMMIT"),
       "1 ingest_batch=0\n0 ingest_batch=1\n".getBytes("UTF-8"))
     // entry-time recovery (any takedown entry or the public call)
-    Takedown.completePending(spark, dir)
+    graft.commit.PartitionSwap.recover(spark, dir)
     val left = spark.read.parquet(dir).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(left == Set(1L), s"recovered layer content: $left")
@@ -404,8 +404,8 @@ class TakedownSpec extends AnyFunSuite {
     def rows(d: String) = Takedown.layerDoctor(spark, d).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(rows(dir) == Set(("layer", "absent")))
-    // a live layer with a compact + a committed takedown tmp + an
-    // uncommitted patch tmp + a compaction leftover + a delta
+    // a live layer with a compact + a committed takedown tmp + a
+    // compaction leftover + a delta
     Seq((1L, "a")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/ingest_batch=-2")
     Seq((2L, "b")).toDF("doc_id", "text")
@@ -415,8 +415,6 @@ class TakedownSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/_takedown_tmp/_TAKEDOWN_COMMIT"),
       "0 ingest_batch=2\n".getBytes("UTF-8"))
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dir/_patch_tmp"))
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$dir/_compact_tmp_5"))
     java.nio.file.Files.createDirectories(
@@ -428,7 +426,6 @@ class TakedownSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     val byArtifact = report.map(t => t._1 -> t._2).toMap
     assert(byArtifact("takedown-swap") == "pending-committed")
-    assert(byArtifact("index-patch") == "uncommitted-garbage")
     assert(byArtifact("compaction-temp") == "uncommitted-garbage")
     assert(byArtifact("delta-segment") == "present")
     assert(byArtifact("centroid-sidecar") == "present")
